@@ -1,0 +1,1 @@
+"""Layered benchmark of the near-duplicate engine (see README.md)."""
