@@ -34,6 +34,19 @@ unit and only scales ~0.74 from 8→32 procs on this box, while pure ALU
 (shift/add/compare) scales ~0.9.  ``x mod (2^31-1)`` folds exactly in
 three ALU steps.  The fold is bit-equal to ``%`` (tested), so parity
 with the reference kernel is preserved.
+
+One wave per kernel stage: ``fused_band_rows``, ``signatures_arrow`` and
+``bands_arrow`` first coalesce their input to ``defaultParallelism``
+partitions (``_one_wave``).  A Python task pays a fixed cost before its
+kernel sees a row — about 0.3 s per task at ``local[4]`` on a 4-core
+host (pyspark's worker calls ``importlib.invalidate_caches()`` per task,
+which re-reads every zip and jar on its ``sys.path``) — while the
+kernel's own compute over an 8k-doc corpus is ~0.2 s.  At that size a
+stage costs per task, not per row: 16 input splits → 4 tasks took the
+warm near-dup pass's band stage from 2.2 s to 1.3 s and its
+participant-signature stage from 1.8 s to 0.8 s (event-log stage walls,
+8k-doc skewed corpus, 4 cores).  These kernels yield per input batch, so
+a task still holds one ``maxRecordsPerBatch``-row batch at a time.
 """
 
 from __future__ import annotations
@@ -280,6 +293,23 @@ def _ragged_list_array(segments: list[np.ndarray]) -> pa.ListArray:
     return pa.ListArray.from_arrays(offsets, pa.array(values))
 
 
+def _one_wave(df: DataFrame) -> DataFrame:
+    """Coalesce a kernel stage's input to one partition per core.
+
+    ``coalesce`` merges input splits without a shuffle and never adds
+    partitions, so an input already at or under ``defaultParallelism``
+    plans unchanged, and the row multiset is the same either way.  Use it
+    only before a kernel that yields per input batch, as the three
+    callers do: a larger task then still holds one
+    ``maxRecordsPerBatch``-row batch at a time.  ``detect_hot_shingles``
+    does not use it, since its counters span the whole partition.  Not
+    measured: at thousands of splits, one task per core makes a straggler
+    or a retried task redo ``1/defaultParallelism`` of the stage instead
+    of one split.
+    """
+    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+
+
 def signatures_arrow(
     df: DataFrame,
     factory: MinHashFactory,
@@ -329,7 +359,8 @@ def signatures_arrow(
     spark_schema = f"{id_col} long, " + (
         "shingles array<long>, " if want_sh else ""
     ) + "signature array<int>"
-    return df.select(id_col, text_col).mapInArrow(compute, spark_schema)
+    return _one_wave(df.select(id_col, text_col)).mapInArrow(
+        compute, spark_schema)
 
 
 def _band_hashes_from_sig(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
@@ -423,7 +454,7 @@ def fused_band_rows(
             )
 
     hash_t = "int" if fold32 else "long"
-    return df.select(id_col, text_col).mapInArrow(
+    return _one_wave(df.select(id_col, text_col)).mapInArrow(
         compute, f"{id_col} long, band_id int, band_hash {hash_t}"
     )
 
@@ -478,7 +509,7 @@ def bands_arrow(sigs: DataFrame, bands: int, rows: int,
             )
 
     hash_type = "int" if fold32 else "long"
-    return sigs.select(id_col, "signature").mapInArrow(
+    return _one_wave(sigs.select(id_col, "signature")).mapInArrow(
         compute, f"{id_col} long, band_id int, band_hash {hash_type}"
     )
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 # that needs a random group to collide with one of the handful of hot
 # groups (~n_groups·n_hot/2^64 — negligible at any real corpus size),
 # so dropping band_id there cuts the widest shuffle of the pipeline by
-# ~25% for free; at the opt-in 32-bit width collisions are material
+# ~25% for free; at the default 32-bit width collisions are material
 # (~n²/2^33 pairs) and _band_key() keeps band_id in the group key.
 BAND_KEY = ["band_hash"]
 

@@ -67,18 +67,20 @@ def _partition_sketches(df: DataFrame, col: str, make, add_batch,
     """mapInPandas: one sketch per partition → rows of sketch JSON bytes.
 
     ``integral_str``: the column is integral but the sketch's element
-    domain is str (CMS point queries arrive as strings) — normalize
-    through int() first, because a batch containing nulls arrives as
-    float64 and ``str(5.0)`` would silently hash a different element
-    than the query-side ``str(5)``."""
+    domain is str (CMS point queries arrive as strings) — a batch
+    containing nulls arrives as float64, where ``str(5.0)`` would hash a
+    different element than the query-side ``str(5)`` and values above
+    2^53 are already rounded, so the keys travel through the exact
+    hi/lo split and are stringified from int64."""
+    split = as_u64 or integral_str
 
     def build(batches):
         sketch = None
         for pdf in batches:
-            if as_u64:
+            if split:
                 _, vals = _u64_from_split(pdf[_U64_HI], pdf[_U64_LO])
-            elif integral_str:
-                vals = [str(int(v)) for v in pdf[col].dropna().tolist()]
+                if integral_str:
+                    vals = [str(v) for v in vals.tolist()]
             else:
                 vals = [str(v) for v in pdf[col].dropna().tolist()]
             if len(vals) == 0:
@@ -89,7 +91,7 @@ def _partition_sketches(df: DataFrame, col: str, make, add_batch,
         if sketch is not None:
             yield pd.DataFrame({"sketch": [sketch.to_bytes()]})
 
-    projected = df.select(*_u64_split_cols(col)) if as_u64 else df.select(col)
+    projected = df.select(*_u64_split_cols(col)) if split else df.select(col)
     return projected.mapInPandas(build, "sketch binary")
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.utils import to_str
 
 
 def get_spark(
@@ -35,23 +36,23 @@ def get_spark(
     # blocks over sockets and belong with the compression-on default
     local_master = master == "local" or master.startswith("local[")
     compress_default = "false" if local_master else "true"
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    conf = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # 12g, not "as much as the box has": on this DRAM-bandwidth-bound
         # sandbox a huge G1 heap means huge young collections whose copying
         # saturates memory bandwidth — measured 73s→18s warm pipeline at 32
         # cores going 48g→12g with capped GC threads
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "12g"),
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
         # shuffle tuning from the round-3 paired A/B (tools/ab_shuffle.py,
         # BENCH/SCALING.md): the hot-path shuffle rows are 8-byte hashes +
         # ids (~incompressible), so lz4 is two pure-overhead memory passes
@@ -69,45 +70,51 @@ def get_spark(
         # threshold the sort shuffle uses one buffer per spill stream and
         # 1m is safe at any partition count.  SPARK_GRAFT_SHUFFLE_BUFFER
         # overrides for bypass-merge-heavy deployments.
-        .config(
-            "spark.shuffle.compress",
+        "spark.shuffle.compress":
             os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", compress_default),
-        )
-        .config(
-            "spark.shuffle.spill.compress",
+        "spark.shuffle.spill.compress":
             os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", compress_default),
-        )
-        .config(
-            "spark.shuffle.file.buffer",
+        "spark.shuffle.file.buffer":
             os.environ.get("SPARK_GRAFT_SHUFFLE_BUFFER", "1m"),
-        )
-        .config(
-            "spark.shuffle.localDisk.file.output.buffer",
+        "spark.shuffle.localDisk.file.output.buffer":
             os.environ.get("SPARK_GRAFT_SHUFFLE_BUFFER", "1m"),
-        )
-        .config(
-            "spark.driver.extraJavaOptions",
+        "spark.driver.extraJavaOptions":
             "-Dio.netty.tryReflectionSetAccessible=true "
             "-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2",
-        )
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
+    }
+    conf.update({k: to_str(v) for k, v in (extra_conf or {}).items()})
     active = SparkSession.getActiveSession()
-    spark = builder.getOrCreate()
-    if active is not None and spark.sparkContext.master != master:
-        # getOrCreate returned the pre-existing session: static confs
-        # (master, cores, shuffle buffers, driver JVM flags) from THIS
-        # call were silently ignored — an A/B harness that relies on
-        # them would measure the old config twice with no error
-        import warnings
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
+    if active is not None:
+        # getOrCreate returned the pre-existing session: it applies the
+        # runtime SQL confs of THIS call but silently ignores the static
+        # ones (master, cores, shuffle buffers, driver JVM flags) — an
+        # A/B harness that relies on them would measure the old config
+        # twice with no error.  The app name is only a label.
+        running = spark.sparkContext.getConf()
 
-        warnings.warn(
-            f"get_spark: an active session with master="
-            f"{spark.sparkContext.master!r} already exists; requested "
-            f"master {master!r} and other static confs were IGNORED — "
-            "stop the old session first for a fresh-config JVM",
-            RuntimeWarning,
+        def differs(k: str, v: str) -> bool:
+            got = running.get(k)
+            if got is not None and k.endswith("JavaOptions"):
+                # Spark prepends its own module flags to JVM options
+                return not got.endswith(v)
+            return got != v
+
+        ignored = sorted(
+            k for k, v in conf.items()
+            if k != "spark.app.name"
+            and not spark.conf.isModifiable(k)
+            and differs(k, v)
         )
+        if ignored:
+            import warnings
+
+            warnings.warn(
+                "get_spark: reusing the active session (master="
+                f"{spark.sparkContext.master!r}); these requested static "
+                f"confs differ from it and were IGNORED: {ignored} — stop "
+                "the old session first for a fresh-config JVM",
+                RuntimeWarning,
+            )
     spark.sparkContext.setLogLevel("WARN")
     return spark

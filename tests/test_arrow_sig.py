@@ -202,3 +202,80 @@ def test_signatures_arrow_null_and_empty_text(spark):
     out = signatures_arrow(df, f).collect()
     assert [r["doc_id"] for r in out] == [1]
     assert len(out[0]["signature"]) == 16
+
+
+# ---------------------------------------------------------------------------
+# partition invariance: each kernel stage runs one task per core
+# ---------------------------------------------------------------------------
+
+def _docs_at(spark, rows, n_parts):
+    """The same docs at ``n_parts`` input splits, with no exchange in the
+    plan (so ``rdd.getNumPartitions()`` runs no job)."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, n_parts),
+        "doc_id long, text string",
+    )
+
+
+@pytest.fixture(scope="module")
+def split_rows(spark):
+    from bloom_filters_spark.sources.pages import pages_table
+
+    rows = [(r["doc_id"], r["text"]) for r in
+            pages_table(spark, 400, seed=3).select("doc_id", "text").collect()]
+    return rows + [(10_001, ""), (10_002, None), (10_003, rows[0][1])]
+
+
+def _row_multiset(df):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_kernels_partition_invariant(spark, split_rows):
+    """1, 4 and 16 input splits → identical kernel row multisets."""
+    from bloom_filters_spark.operators.arrow_sig import (
+        fused_band_rows,
+        signatures_arrow,
+    )
+
+    f = MinHashFactory(32, M31, 0x1234567890)
+    kernels = {
+        "fused_band_rows": lambda d: fused_band_rows(d, f, bands=8, rows=4),
+        "signatures_arrow": lambda d: signatures_arrow(
+            d, f, need_shingles=True),
+    }
+    for name, kernel in kernels.items():
+        outs = [_row_multiset(kernel(_docs_at(spark, split_rows, n)))
+                for n in (1, 4, 16)]
+        assert outs[0], name
+        assert outs[0] == outs[1] == outs[2], name
+
+
+def test_kernel_stages_plan_one_wave(spark, split_rows):
+    """A 16-split input plans at most defaultParallelism kernel tasks;
+    an input already under the core count keeps its splits."""
+    from bloom_filters_spark.operators.arrow_sig import (
+        bands_arrow,
+        fused_band_rows,
+        signatures_arrow,
+    )
+
+    dp = spark.sparkContext.defaultParallelism
+    f = MinHashFactory(32, M31, 0x1234567890)
+    docs16 = _docs_at(spark, split_rows, 16)
+    sigs16 = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(i, list(range(8))) for i in range(64)], 16),
+        "doc_id long, signature array<int>",
+    )
+    stages = [
+        fused_band_rows(docs16, f, bands=8, rows=4),
+        signatures_arrow(docs16, f),
+        bands_arrow(sigs16, bands=4, rows=2),
+    ]
+    for out in stages:
+        assert out.rdd.getNumPartitions() == min(16, dp)
+    docs2 = _docs_at(spark, split_rows, 2)
+    assert fused_band_rows(docs2, f, 8, 4).rdd.getNumPartitions() == 2

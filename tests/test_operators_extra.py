@@ -196,6 +196,22 @@ def test_membership_exact_above_2_53_with_nulls(spark):
         assert len(kept & set(near_misses)) <= 1
 
 
+def test_cms_integral_key_exact_above_2_53_with_null(spark):
+    """A bigint above 2^53 in a build batch that also holds a null is
+    counted under its exact ``str()`` key (the query side's), not under
+    the float64-rounded neighbour."""
+    from bloom_filters_spark.operators.sketch_agg import build_cms
+
+    big = 2**53 + 1
+    df = spark.createDataFrame(
+        [(big,), (None,), (7,), (big,)], "k long"
+    ).repartition(1)  # one batch, so the null float64-promotes it
+    cms = build_cms(df, "k")
+    assert cms.count(str(big)) == 2
+    assert cms.count(str(2**53)) == 0
+    assert cms.count("7") == 1
+
+
 def test_simhash_arrow_matches_python_oracle(spark):
     """The production mapInArrow SimHash kernel must be bit-equal to the
     scalar first-principles oracle (simhash_py) on messy inputs —

@@ -417,6 +417,35 @@ def test_hot_shingle_detection_exact_across_partitions(spark):
     assert len(got) == len(want)
 
 
+@pytest.mark.parametrize("boilerplate_max_df", [None, 0.05])
+def test_pipeline_partition_invariant(spark, boilerplate_max_df):
+    """The same docs at 1, 4 and 16 input splits cluster identically,
+    with and without the boilerplate detector's two kernel passes."""
+    from bloom_filters_spark.sources.pages import pages_table
+
+    boiler = " ".join(f"menu{j} link{j}" for j in range(40))
+    rows = [
+        (r["doc_id"], (boiler + " " if r["doc_id"] % 7 == 0 else "")
+         + r["text"])
+        for r in pages_table(spark, 600, seed=5)
+        .select("doc_id", "text").collect()
+    ]
+    cfg = NearDupConfig(threshold=0.8, boilerplate_max_df=boilerplate_max_df)
+    outs = []
+    for n in (1, 4, 16):
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, n),
+            "doc_id long, text string",
+        )
+        outs.append(sorted(
+            (r["doc_id"], r["cluster_id"])
+            for r in near_dup_pipeline(df, cfg).collect()
+        ))
+    assert len(outs[0]) == len(rows)
+    assert any(d != c for d, c in outs[0])  # planted dups really merge
+    assert outs[0] == outs[1] == outs[2]
+
+
 def test_exact_prededup_preserves_clusters(spark):
     """HLL-gated exact pre-dedup must give the same cluster assignment
     as the base pipeline: exact copies collapse to a representative
